@@ -124,6 +124,20 @@ object Tables {
     }.max)
   }
 
+  /** `path:length:modificationTime` of every file a [[load]] of `name`
+    * would scan, listed by the file index class the load's relation
+    * uses (hidden and metadata files skipped alike) — for
+    * [[graft.ops.Twins.gate]]'s memo key, so a rewrite in place changes
+    * the key with the data. Metadata only, and cheaper than a load,
+    * whose parquet schema inference runs a Spark job per call.
+    */
+  private[graft] def fileListing(spark: SparkSession, dir: String, name: String): Seq[String] = {
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    new InMemoryFileIndex(spark, Seq(new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")),
+      Map.empty, None).allFiles()
+      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").sorted
+  }
+
   // Bucketed (write-time pre-shuffled) tables live in
   // [[graft.sources.Bucketed]] — BucketedSpec pins the exchange-free
   // fact-fact join and the bucket-count-mismatch fallback.

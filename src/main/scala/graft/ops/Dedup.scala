@@ -86,28 +86,21 @@ object Dedup {
     * composition surface ([[Curation]]); all plan properties
     * (ReusedExchange single signature pass, SHUFFLE_HASH pin) live here.
     *
-    * EXACT-TWIN COLLAPSE, SEMANTICS-PRESERVING (round 16, d4's pattern
-    * with d2-specific simplifications): the signature is a pure
-    * function of the token array, band keys and est_jaccard are pure
-    * functions of the signatures, and the self-join's `doc_a < doc_b`
-    * is the only id-level term — so docs sharing a token array are
-    * bit-interchangeable, the md5-heavy signature pass and the band
-    * join run over one REPRESENTATIVE per distinct array, and result
-    * pairs expand back through group membership: cross-group member
-    * pairs inherit their rep pair's est (least/greatest orientation, as
-    * d4); within-group pairs are emitted directly at est 1.000 —
-    * identical signatures agree on every minhash and collide in every
-    * band unconditionally, so no join needs to witness them (d2 has no
-    * posting cap, which is what makes the within leg a constant — the
-    * expression d4 still has to compute). At the 100× gate the corpus
-    * is ~95× text-duplicated: the collapse cuts the signature md5s and
-    * the band-bucket populations by that factor while the 2.75M-row
-    * output (which the expansion is bounded by) stays identical —
-    * proved bit-identical at sf0.01 and sf10, pinned by PropertySpec's
-    * duplicated-corpus twin test. Stat-gated like d4 ([[twinGate]] on
-    * text — no blocking key here): twin-free corpora (the driver
-    * fixtures, where d2 beats the reference engine outright) keep the
-    * round-2 two-exchange pipeline and pay nothing.
+    * EXACT-TWIN COLLAPSE ([[Twins]], gated on text): the signature is a
+    * pure function of the token array, band keys and est_jaccard are
+    * pure functions of the signatures, and the self-join's
+    * `doc_a < doc_b` is the only id-level term — so docs sharing a
+    * token array are bit-interchangeable, and the md5-heavy signature
+    * pass and the band join run over one representative per distinct
+    * array. Cross-group member pairs inherit their rep pair's est;
+    * within-group pairs are exactly 1.0 — identical signatures agree
+    * on every minhash and collide in every band unconditionally, so no
+    * join needs to witness them (d2 has no posting cap, which is what
+    * makes the within leg a constant — the expression d4 still has to
+    * compute). At the 100× gate the corpus is ~95× text-duplicated:
+    * the collapse cuts the signature md5s and the band-bucket
+    * populations by that factor while the 2.75M-row output stays
+    * identical (pinned by PropertySpec's duplicated-corpus twin test).
     */
   def minhashPairs(docs: DataFrame): DataFrame =
     minhashPairs(docs, collapse = false)
@@ -117,39 +110,11 @@ object Dedup {
       .select(col("doc_id"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
     if (!collapse) return pairsFromSigs(minhashSigs(toked))
-    // Twin hub: one row per DISTINCT token array. Persisted via
-    // OpCaches — the signature pass and both expansion joins would
-    // each replay the tokenize + groupBy otherwise; released by the
-    // harnesses per query.
-    val grp = OpCaches.persisted(toked.groupBy("t")
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members")))
-    val repPairs = pairsFromSigs(
-      minhashSigs(grp.select(col("rep").as("doc_id"), col("t"))))
-    // Cross expansion: one side exploded at a time (a row never holds
-    // the m_a × m_b product); least/greatest because member ids
-    // interleave across groups (d4's crossOut shape).
-    val crossOut = repPairs
-      .join(grp.select(col("rep").as("doc_a"), col("members").as("ms_a")), Seq("doc_a"))
-      .join(grp.select(col("rep").as("doc_b"), col("members").as("ms_b")), Seq("doc_b"))
-      .select(col("est_jaccard"), col("ms_b"), explode(col("ms_a")).as("x"))
-      .select(col("est_jaccard"), col("x"), explode(col("ms_b")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"), col("est_jaccard"))
-    // Within-group pairs: sorted members + posexplode/slice keep
-    // doc_a < doc_b without a pair product in one row (d4's shape);
-    // round(1.0, 3) in the original is the double literal 1.0.
-    val withinOut = grp.filter(size(col("members")) >= 2)
-      .select(col("members"), posexplode(col("members")).as(Seq("i", "x")))
-      .select(col("x").as("doc_a"),
-        explode(slice(col("members"), col("i") + lit(2),
-          size(col("members")))).as("doc_b"),
-        lit(1.0).as("est_jaccard"))
-    // Schema parity with the direct path (d4's analysis-time widener:
-    // the optimizer folds it before execution).
-    def widen(c: String) = when(col(c).isNotNull, col(c)).as(c)
-    crossOut.unionByName(withinOut)
-      .select(widen("doc_a"), widen("doc_b"), col("est_jaccard"))
+    val hub = Twins.hub(toked, Seq("t"), "doc_id")
+    // round(1.0, 3) in the direct form is the double literal 1.0.
+    Twins.expandPairs(hub, "doc_id",
+      pairsFromSigs(minhashSigs(hub.select(col("doc_id"), col("t")))),
+      hub.select(col("members"), lit(1.0).as("est_jaccard")), "doc_a", "doc_b")
   }
 
   /** Band explode + self-join + per-pair dedup over a signature frame
@@ -189,19 +154,14 @@ object Dedup {
     * votes ±1 on bit i; the signed sums per document give the signature.
     * One explode + one aggregation — linear in corpus size.
     *
-    * EXACT TWIN COLLAPSE (round 17): the signature is a pure function of
-    * the TEXT alone (no corpus-level statistic at all), so behind the
-    * shared text [[twinGate]] the md5 explode + 16 bit sums run once per
-    * DISTINCT text over [[textHub]] and signatures fan back through
-    * group membership — no weighting needed anywhere. The
-    * [[hasNullDocId]] guard covers the one semantic the hub cannot
-    * reproduce: the direct groupBy merges ALL null-id documents into a
-    * single signature row, while collect_list drops them from members
-    * (same rule for d7/t6; fixture and gate corpora carry none).
+    * EXACT TWIN COLLAPSE ([[Twins]], gated on text): the signature is a
+    * pure function of the TEXT alone (no corpus-level statistic at
+    * all), so the md5 explode + 16 bit sums run once per distinct text
+    * and signatures fan back through group membership — no weighting
+    * needed anywhere.
     */
   def d3Simhash(s: SparkSession, dir: String): DataFrame =
-    d3SimhashImpl(s, dir,
-      collapse = twinGate(s, dir, Seq("text")) && !hasNullDocId(s, dir))
+    d3SimhashImpl(s, dir, collapse = twinGate(s, dir, Seq("text")))
 
   private[graft] def d3SimhashImpl(s: SparkSession, dir: String,
       collapse: Boolean): DataFrame = {
@@ -220,11 +180,16 @@ object Dedup {
             .reduce(_ + _).as("simhash"))
     }
     if (collapse) {
-      val hub = textHub(load(s, dir, "documents")
-        .select(col("doc_id"), col("text")))
-      expandByMembers(signature(hub), hub)
+      val hub = Twins.hub(load(s, dir, "documents"), Seq("text"), "doc_id")
+      Twins.expand(signature(hub), hub, "doc_id")
     } else signature(graft.Tables.spread(load(s, dir, "documents")))
   }
+
+  /** The documents twin gate on `keyCols` ([[Twins.gate]]); perfbench
+    * reads its verdicts through this name.
+    */
+  private[graft] def twinGate(s: SparkSession, dir: String, keyCols: Seq[String]): Boolean =
+    Twins.gate(s, dir, "documents", "doc_id", keyCols)
 
   /** Inverted-index posting-list cap: shingles appearing in more than
     * this many documents of one block contribute no pairs (ubiquitous
@@ -276,62 +241,9 @@ object Dedup {
     * the per-document formulation at every duplication depth (proved
     * bit-identical at sf0.01 and the 100× corpus, pinned by
     * PropertySpec's brute-force twin test), so the oracle SQL is
-    * UNCHANGED — DuckDB still runs the direct form.
-    *
-    * STAT-GATED (d15's strategy rule): on a twin-free corpus the
-    * collapse buys nothing and costs two extra shuffles + two cache
-    * fills (measured ~+0.6 s on the sf0.1 bench fixture, where d4
-    * otherwise beats DuckDB), so the public entry probes the exact-copy
-    * depth with one bounded driver action — approx_count_distinct over
-    * xxhash64(source, text), a single narrow codegen'd scan, rsd 5% is
-    * ample for a 1.2× threshold, engine-side only so the hash choice
-    * never touches the oracle — and runs the per-document form below
-    * that depth. Both paths are row-identical by construction, so a
-    * probe misread can only cost time, never correctness. The verdict
-    * is memoized per corpus directory (a JVM-lifetime property of the
-    * data, not of the query): repeated calls — the bench's min-of-3,
-    * an embedder's loop — pay the probe scan once, and a stale entry
-    * after an in-place corpus rewrite can only mis-pick the STRATEGY,
-    * never the rows.
+    * UNCHANGED — DuckDB still runs the direct form. Gated on
+    * (source, text), the blocking key plus the text ([[Twins]]).
     */
-  /** Memoized exact-copy depth probe shared by the stat-gated twin
-    * collapses (d4 on (source, text) — its blocking key; d2 on text
-    * alone — it has no blocking key): one bounded driver action,
-    * approx_count_distinct over xxhash64(keyCols), collapse iff avg
-    * copies per distinct key ≥ 1.2. Engine-side only, memoized per
-    * (corpus dir, key) for the JVM lifetime — see d4's scaladoc for
-    * why a probe misread can only cost time, never rows.
-    */
-  private val twinGates = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-
-  private[graft] def twinGate(s: SparkSession, dir: String,
-      keyCols: Seq[String]): Boolean =
-    twinGates.computeIfAbsent(dir + "#" + keyCols.mkString(","), _ => {
-      val st = graft.Tables.spread(load(s, dir, "documents"))
-        .agg(count(lit(1)).as("n"),
-          approx_count_distinct(xxhash64(keyCols.map(col): _*)).as("nd"))
-        .head
-      // n > 0: an empty corpus has no twins (0 >= 0 would read as
-      // "duplicated" and route degenerate inputs onto the collapse
-      // plans, whose expanded-id nullability differs — caught by
-      // DegenerateCorpusSpec's schema-parity gate on t10, round 17).
-      st.getLong(0) > 0L && st.getLong(0) * 10L >= st.getLong(1) * 12L
-    })
-
-  /** Memoized null-doc_id probe for the d3/d7/t6 family (round 17),
-    * whose DIRECT forms groupBy(doc_id) — merging every null-id
-    * document into one output group — while the hub expansion drops
-    * null members (collect_list skips nulls). Those operators collapse
-    * only on corpora with zero null ids; evaluated lazily AFTER the
-    * twin gate (short-circuit), so twin-free corpora never pay it.
-    */
-  private val nullIdGates = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-
-  private[graft] def hasNullDocId(s: SparkSession, dir: String): Boolean =
-    nullIdGates.computeIfAbsent(dir, _ =>
-      load(s, dir, "documents").filter(col("doc_id").isNull)
-        .limit(1).count() > 0L)
-
   def d4NgramJaccard(s: SparkSession, dir: String): DataFrame =
     d4NgramJaccardImpl(s, dir, twinGate(s, dir, Seq("source", "text")))
 
@@ -380,25 +292,19 @@ object Dedup {
             (col("n_a") + col("n_b") - col("n_inter")).cast("double"), 6).as("jaccard"))
         .filter(col("jaccard") >= 0.3)
     }
-    // Twin collapse hub (one row per DISTINCT document per source):
-    // sorted key array + sorted member list. Persisted via OpCaches —
-    // three consumers (postings, cross expansion ×2 legs, within
-    // expansion) would each replay tokenize→shingle→md5 plus two
-    // shuffles; MEMORY_AND_DISK so corpus scale spills, released by the
-    // harnesses per query. n_sh is part of the group key for the same
-    // reason as d15: an intra-doc 60-bit collision (n_sh > |arr|) must
-    // not merge docs whose true shingle counts differ.
-    val grp = OpCaches.persisted(sh.groupBy("doc_id")
+    // Twin hub: one row per DISTINCT document per source (sorted key
+    // array). n_sh is part of the group key for the same reason as
+    // d15: an intra-doc 60-bit collision (n_sh > |arr|) must not merge
+    // docs whose true shingle counts differ.
+    val grp = Twins.hub(sh.groupBy("doc_id")
       .agg(first(col("source")).as("source"), first(col("n_sh")).as("n_sh"),
-        sort_array(collect_list(col("shk"))).as("arr"))
-      .groupBy("source", "arr", "n_sh")
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members")))
+        sort_array(collect_list(col("shk"))).as("arr")),
+      Seq("source", "arr", "n_sh"), "doc_id")
     // Persisted like grp: the cross-pair and within-pair legs both
     // consume it; capped lists bound the footprint (d15's postings
     // rule).
     val postings = OpCaches.persisted(grp
-      .select(col("source"), col("rep"), col("n_sh"),
+      .select(col("source"), col("doc_id").as("rep"), col("n_sh"),
         size(col("members")).as("m"), explode(col("arr")).as("shk"))
       .groupBy(col("source"), col("shk"))
       .agg(sort_array(collect_list(struct(col("rep"), col("n_sh"), col("m")))).as("reps"),
@@ -414,56 +320,27 @@ object Dedup {
       .groupBy(col("p.rep_a").as("rep_a"), col("p.rep_b").as("rep_b"))
       .agg(count(lit(1)).as("n_inter"),
         max(col("p.n_a")).as("n_a"), max(col("p.n_b")).as("n_b"))
-      .select(col("rep_a"), col("rep_b"),
+      .select(col("rep_a").as("doc_a"), col("rep_b").as("doc_b"),
         round(col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")).cast("double"), 6).as("jaccard"))
       .filter(col("jaccard") >= 0.3)
-    // Cross expansion: every (member of A) × (member of B) pair carries
-    // the rep pair's J. Groups are disjoint doc sets, so no overlap with
-    // the within leg; one side exploded at a time (a row never holds the
-    // m_a × m_b product). least/greatest because member ids interleave
-    // across groups.
-    val crossOut = repPairs
-      .join(grp.select(col("rep").as("rep_a"), col("members").as("ms_a")), Seq("rep_a"))
-      .join(grp.select(col("rep").as("rep_b"), col("members").as("ms_b")), Seq("rep_b"))
-      .select(col("jaccard"), col("ms_b"), explode(col("ms_a")).as("x"))
-      .select(col("jaccard"), col("x"), explode(col("ms_b")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"), col("jaccard"))
-    // Within-group pairs: ni_w = how many of the group's shingles
-    // survive the doc-depth cap (count of kept postings containing the
-    // rep — including single-rep postings, whose n_docs = m ≥ 2). All
-    // member pairs of the group share J = ni_w / (2n − ni_w); sorted
-    // members + posexplode/slice keep doc_a < doc_b without a pair
-    // product ever materializing in one row.
-    val withinOut = postings
+    // Within-group J: ni_w = how many of the group's shingles survive
+    // the doc-depth cap (count of kept postings containing the rep —
+    // including single-rep postings, whose n_docs = m ≥ 2). All member
+    // pairs of the group share J = ni_w / (2n − ni_w).
+    val withinJ = postings
       .select(explode(col("reps")).as("r"))
       .filter(col("r.m") >= 2)
-      .groupBy(col("r.rep").as("rep"))
+      .groupBy(col("r.rep").as("doc_id"))
       .agg(count(lit(1)).as("ni_w"), first(col("r.n_sh")).as("n_sh"))
-      .select(col("rep"),
+      .select(col("doc_id"),
         round(col("ni_w").cast("double") /
           (col("n_sh") * 2 - col("ni_w")).cast("double"), 6).as("jaccard"))
       .filter(col("jaccard") >= 0.3)
-      .join(grp.select(col("rep"), col("members")), Seq("rep"))
-      .select(col("jaccard"), col("members"),
-        posexplode(col("members")).as(Seq("i", "x")))
-      .select(col("x").as("doc_a"),
-        explode(slice(col("members"), col("i") + lit(2),
-          size(col("members")))).as("doc_b"),
-        col("jaccard"))
-    // Schema parity with the direct path: the expansion's least/greatest
-    // and explode outputs are non-nullable, but the per-document form's
-    // grouping keys are nullable — a caller switching corpora (and
-    // therefore strategies) must see ONE schema (DegenerateCorpusSpec
-    // pins it). `when(isNotNull, …)` widens nullability at ANALYSIS
-    // time (where Dataset.schema is read); the optimizer's
-    // NullPropagation folds it away before execution, so the widener is
-    // schema-only. (Dataset.to was tried first: nullability RELAXATION
-    // is a no-op upcast there and leaves the schema non-nullable.)
-    def widen(c: String) = when(col(c).isNotNull, col(c)).as(c)
-    crossOut.unionByName(withinOut.select("doc_a", "doc_b", "jaccard"))
-      .select(widen("doc_a"), widen("doc_b"), col("jaccard"))
+    Twins.expandPairs(grp, "doc_id", repPairs,
+      withinJ.join(grp.select(col("doc_id"), col("members")), Seq("doc_id"))
+        .select(col("members"), col("jaccard")),
+      "doc_a", "doc_b")
   }
 
   /** d15's Jaccard threshold as an exact rational (3/10, d4's bar):
@@ -850,19 +727,21 @@ object Dedup {
       collapse = graft.ops.Kmeans.embTwinGate(s, dir))
   }
 
-  /** TWIN COLLAPSE (round 16, [[Similarity.vecHub]] family note): the
-    * banding, the cap and the score are pure functions of the vector
-    * VALUE plus a weighted bucket population, so candidate generation
-    * and cosine run once per distinct-vector GROUP pair and member
-    * pairs expand back — d5's chunked cross expansion (explode side A
-    * into rows before pairing with side B; explicit repartition on the
-    * exploded member because AQE's byte-based sizing is blind to the
-    * expansion) plus its sorted-members within-group leg.
+  /** TWIN COLLAPSE ([[Twins]]; the capped-band family note in
+    * [[Similarity]]): the banding, the cap and the score are pure
+    * functions of the vector VALUE plus a weighted bucket population,
+    * so candidate generation and cosine run once per distinct-vector
+    * GROUP pair and member pairs expand back — a chunked cross
+    * expansion (explode side A into rows before pairing with side B;
+    * explicit repartition on the exploded member because AQE's
+    * byte-based sizing is blind to the expansion) plus a sorted-members
+    * within-group leg.
     */
   private[graft] def d8bNearDupMultibandImpl(e: DataFrame,
       collapse: Boolean): DataFrame = {
     if (collapse) {
-      val hub = Similarity.vecHub(e, "vec_id", "v")
+      val hub = Twins.hub(e, Seq("v"), "vec_id")
+      val idNullable = e.schema("vec_id").nullable
       val gp = Similarity.groupPairs(
         Similarity.cappedBandsGrouped(hub, "vec_id", "v"), "vec_id", "v")
         .filter(col("cos_sim") >= 0.3)
@@ -876,10 +755,8 @@ object Dedup {
         .select(col("cos_sim"), col("x"), explode(col("mb")).as("y"))
         .select(least(col("x"), col("y")).as("va"),
           greatest(col("x"), col("y")).as("vb"), col("cos_sim"))
-        // when(isNotNull, ..) widens nullability back to the direct
-        // path's (d4's expansion precedent: analysis-time schema parity).
-        .select(when(col("va").isNotNull, col("va")).as("vec_a"),
-          when(col("vb").isNotNull, col("vb")).as("vec_b"), col("cos_sim"))
+        .select(Twins.widen(col("va"), idNullable).as("vec_a"),
+          Twins.widen(col("vb"), idNullable).as("vec_b"), col("cos_sim"))
       val within = gp.filter(col("ga") === col("gb"))
         .join(mem.select(col("rep").as("ga"), col("members").as("ma")), Seq("ga"))
         .filter(size(col("ma")) >= 2)
@@ -888,8 +765,8 @@ object Dedup {
         .select(col("x").as("va"),
           explode(slice(col("ma"), col("i") + lit(2), size(col("ma")))).as("vb"),
           col("cos_sim"))
-        .select(when(col("va").isNotNull, col("va")).as("vec_a"),
-          when(col("vb").isNotNull, col("vb")).as("vec_b"), col("cos_sim"))
+        .select(Twins.widen(col("va"), idNullable).as("vec_a"),
+          Twins.widen(col("vb"), idNullable).as("vec_b"), col("cos_sim"))
       return cross.unionByName(within)
     }
     val c = Similarity.cappedBands(e, "vec_id", "v")
@@ -929,16 +806,12 @@ object Dedup {
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-    // Persisted: the cross-pair self-join (twice) and the within-group
-    // leg all consume grp; registered with OpCaches (released by
-    // harnesses between queries).
-    val grp = OpCaches.persisted(
-      e.groupBy(col("label"), col("v"))
-        .agg(min(col("vec_id")).as("rep"),
-          sort_array(collect_list(col("vec_id"))).as("members")))
+    // Always collapsed (no gate): the hub is read by both self-join
+    // sides and the within-group leg.
+    val grp = Twins.hub(e, Seq("label", "v"), "vec_id")
     val cross = grp.as("a")
       .join(grp.as("b").hint("SHUFFLE_HASH"),
-        col("a.label") === col("b.label") && col("a.rep") < col("b.rep"))
+        col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.members").as("ma"), col("b.members").as("mb"),
         round(Similarity.cosine(col("a.v"), col("b.v")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= 0.3)
@@ -1096,21 +969,19 @@ object Dedup {
       .select(col("doc_id"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
     // The sig-level grouping above collapses the GRAPH but still pays
-    // the md5 signature pass once per copy. Behind the shared text
-    // gate (round 16, d2's hub): hash once per distinct token array
+    // the md5 signature pass once per copy. Behind the text twin gate
+    // ([[Twins]], d2's hub): hash once per distinct token array
     // and let the signature grouping merge the token groups' member
     // lists — min-of-mins is the global min, and flatten-of-lists is
     // the original membership, so `grp` is value-identical and every
     // downstream step (banding, CC, expansion) is untouched.
     val grp = if (twinGate(s, dir, Seq("text"))) {
-      val tg = OpCaches.persisted(toked.groupBy("t")
-        .agg(min(col("doc_id")).as("doc_id"),
-          collect_list(col("doc_id")).as("ms")))
+      val tg = Twins.hub(toked, Seq("t"), "doc_id")
       minhashSigs(tg.select(col("doc_id"), col("t")))
-        .join(tg.select(col("doc_id"), col("ms")), Seq("doc_id"))
+        .join(tg.select(col("doc_id"), col("members")), Seq("doc_id"))
         .groupBy("sig")
         .agg(min(col("doc_id")).as("rep"),
-          sort_array(flatten(collect_list(col("ms")))).as("members"))
+          sort_array(flatten(collect_list(col("members")))).as("members"))
     } else minhashSigs(toked).groupBy("sig")
       .agg(min(col("doc_id")).as("rep"),
         sort_array(collect_list(col("doc_id"))).as("members"))
@@ -1411,8 +1282,8 @@ object Dedup {
     substrSpans(load(s, dir, "documents"),
       collapse = twinGate(s, dir, Seq("text")))
 
-  /** EXACT-TWIN COLLAPSE for the whole window-hash family (round 16,
-    * d4/d2's pattern): every per-position expression — the K-char
+  /** EXACT-TWIN COLLAPSE for the whole window-hash family ([[Twins]],
+    * gated on text): every per-position expression — the K-char
     * window md5s, the winnow local-min, the island merge, the scrub
     * fold — is a pure function of the document's TEXT, and the only
     * corpus-global terms are per-key occurrence aggregates (d12's
@@ -1423,41 +1294,19 @@ object Dedup {
     * exactly: a text duplicated m ≥ 2 times has EVERY window duplicated
     * and flags end to end, which is precisely why the 100× gate made
     * this family's walls ~linear in the duplication factor — and
-    * per-document results expand back through group membership
-    * (output-bound; spans/fingerprints/scrubbed text are identical
-    * across twins). Stat-gated per corpus via [[twinGate]] on text;
-    * the frame-level cores below keep the direct path as their
+    * spans, fingerprints and scrubbed text are identical across twins.
+    * The frame-level cores below keep the direct path as their
     * composition default.
-    */
-  private[ops] def textHub(docs: DataFrame): DataFrame =
-    OpCaches.persisted(docs
-      .groupBy(col("text"))
-      .agg(min(col("doc_id")).as("doc_id"),
-        sort_array(collect_list(col("doc_id"))).as("members"),
-        count(lit(1)).as("mult")))
-
-  /** d12's flagged-window pipeline over a [[textHub]]: the gram pass
-    * runs per representative and the corpus-wide occurrence count is
-    * the mult-weighted sum over the window-key partition.
+    *
+    * d12's flagged-window pipeline over a text hub: the gram pass runs
+    * per representative and the corpus-wide occurrence count is the
+    * mult-weighted sum over the window-key partition.
     */
   private def repDupSpans(hub: DataFrame): DataFrame =
     islands(windowGrams(hub.select(col("doc_id"), col("text"), col("mult")),
         passthrough = Seq("mult"))
       .withColumn("n_occ", sum(col("mult")).over(Window.partitionBy("gk")))
       .filter(col("n_occ") >= 2))
-
-  /** Fan per-representative rows back out to every member; `doc_id` is
-    * replaced (widened like d4's expansion — analysis-time nullability
-    * parity with the direct path), all other columns ride along.
-    */
-  private[ops] def expandByMembers(rep: DataFrame, hub: DataFrame): DataFrame = {
-    val rest = rep.columns.filter(_ != "doc_id").toSeq
-    rep.withColumnRenamed("doc_id", "rep")
-      .join(hub.select(col("doc_id").as("rep"), col("members")), Seq("rep"))
-      .select(explode(col("members")).as("docx") +: rest.map(col): _*)
-      .select(when(col("docx").isNotNull, col("docx")).as("doc_id") +:
-        rest.map(col): _*)
-  }
 
   /** Segment stride for the window-hash pass: documents are first
     * exploded into stride-sized segments (with K-1 chars of overlap so
@@ -1481,8 +1330,8 @@ object Dedup {
 
   private[graft] def substrSpans(docs: DataFrame, collapse: Boolean): DataFrame = {
     if (collapse) {
-      val hub = textHub(docs)
-      return expandByMembers(repDupSpans(hub), hub)
+      val hub = Twins.hub(docs, Seq("text"), "doc_id")
+      return Twins.expand(repDupSpans(hub), hub, "doc_id")
     }
     // Occurrence count as a WINDOW count over the gk partition (t10's
     // shape): structurally ONE hashing pass — a groupBy+join-back
@@ -1587,9 +1436,9 @@ object Dedup {
     // Twins share their spans AND therefore their scrubbed text: scrub
     // once per representative, expand the (clean_text, removed) rows.
     // One hub serves the gram pass, the scrub rejoin and the fan-out.
-    val hub = textHub(docs)
-    expandByMembers(
-      scrubWith(hub.select(col("doc_id"), col("text")), repDupSpans(hub)), hub)
+    val hub = Twins.hub(docs, Seq("text"), "doc_id")
+    Twins.expand(
+      scrubWith(hub.select(col("doc_id"), col("text")), repDupSpans(hub)), hub, "doc_id")
   }
 
   /** t13 — contamination SPANS: the decontamination twin of d12. A
@@ -1629,11 +1478,11 @@ object Dedup {
       // Collapsed: scrub once per distinct CORPUS text (the ev = 0 side
       // of t13's tagged hub — the same hub instance feeds the span
       // pass, the scrub rejoin and the fan-out) and expand.
-      val hub = taggedHub(t1314Tagged(s, dir))
+      val hub = Twins.hub(t1314Tagged(s, dir), Seq("text", "ev"), "doc_id")
       val corpusHub = hub.filter(col("ev") === 0)
-      return expandByMembers(
+      return Twins.expand(
         scrubWith(corpusHub.select(col("doc_id"), col("text")),
-          repContamSpans(hub)), corpusHub)
+          repContamSpans(hub)), corpusHub, "doc_id")
     }
     val d = load(s, dir, "documents")
     scrubWith(d.filter(!(col("source") <=> lit(EvalSrc))),
@@ -1664,21 +1513,15 @@ object Dedup {
       // copies within a side are; the contamination verdict reads only
       // max(ev) per window key, so group multiplicity is irrelevant
       // here — the collapse is tag-exact with no weighting needed.
-      val hub = taggedHub(tagged)
-      return expandByMembers(repContamSpans(hub), hub)
+      val hub = Twins.hub(tagged, Seq("text", "ev"), "doc_id")
+      return Twins.expand(repContamSpans(hub), hub, "doc_id")
     }
     islands(windowGrams(tagged, passthrough = Seq("ev"))
       .withColumn("hit", max(col("ev")).over(Window.partitionBy("gk")))
       .filter(col("ev") === 0 && col("hit") === 1))
   }
 
-  private def taggedHub(tagged: DataFrame): DataFrame =
-    OpCaches.persisted(tagged
-      .groupBy(col("text"), col("ev"))
-      .agg(min(col("doc_id")).as("doc_id"),
-        sort_array(collect_list(col("doc_id"))).as("members")))
-
-  /** t13's flagged-window pipeline over a [[taggedHub]] — rep-level
+  /** t13's flagged-window pipeline over a (text, ev) hub — rep-level
     * grams with the ev tag; only ev = 0 reps emit spans.
     */
   private def repContamSpans(hub: DataFrame): DataFrame =
@@ -1730,8 +1573,8 @@ object Dedup {
     // all, so the collapse is the plain text hub: select once per
     // distinct text, expand (doc_id, off, gk) rows — the 28M-row
     // output write is the remaining floor at the 100× gate.
-    val hub = textHub(docs)
-    expandByMembers(winnowDirect(hub.select(col("doc_id"), col("text"))), hub)
+    val hub = Twins.hub(docs, Seq("text"), "doc_id")
+    Twins.expand(winnowDirect(hub.select(col("doc_id"), col("text"))), hub, "doc_id")
   }
 
   private def winnowDirect(docs: DataFrame): DataFrame = {
@@ -1816,13 +1659,12 @@ object Dedup {
     * pinning the aggregate's semantics declaratively).
     */
   def d7Simhash64(s: SparkSession, dir: String): DataFrame =
-    d7Simhash64Impl(s, dir,
-      collapse = twinGate(s, dir, Seq("text")) && !hasNullDocId(s, dir))
+    d7Simhash64Impl(s, dir, collapse = twinGate(s, dir, Seq("text")))
 
   /** d3's twin collapse, same reasoning verbatim: the 64-bit signature
     * is a pure per-text function (the two md5s per token dominate the
     * wall), so it runs once per distinct text and fans back through
-    * membership. Null-id guard shared with d3/t6.
+    * membership.
     */
   private[graft] def d7Simhash64Impl(s: SparkSession, dir: String,
       collapse: Boolean): DataFrame = {
@@ -1834,9 +1676,8 @@ object Dedup {
       .groupBy("doc_id")
       .agg(graft.functions.SimHash64Agg.simhash64(col("h")).as("simhash64"))
     if (collapse) {
-      val hub = textHub(load(s, dir, "documents")
-        .select(col("doc_id"), col("text")))
-      expandByMembers(signature(hub), hub)
+      val hub = Twins.hub(load(s, dir, "documents"), Seq("text"), "doc_id")
+      Twins.expand(signature(hub), hub, "doc_id")
     } else signature(graft.Tables.spread(load(s, dir, "documents")))
   }
 

@@ -85,15 +85,9 @@ object FuzzyJoin {
     * Callers with non-keyed rows must dedup/re-key first.
     */
   private[graft] def fuzzyPairs(keyed: DataFrame): DataFrame = {
-    val named = keyed.filter(col("name").isNotNull)
-    // Twin collapse (d15's): one representative per DISTINCT name.
-    // Four consumers below (rep keys, both expansion sides, the
-    // within-group leg) — persist so the groupBy runs once. Registered
-    // with OpCaches: CacheManager holds persisted plans strongly (GC /
-    // ContextCleaner never reclaims them), so embedders release via
-    // OpCaches.release(spark); the per-query harnesses clearCache.
-    val grp = OpCaches.persisted(named.groupBy("name")
-      .agg(sort_array(collect_list(col("k"))).as("members")))
+    // Twin collapse ([[Twins]], always on): one representative per
+    // DISTINCT name; the name itself is the hub key the pairs carry.
+    val grp = Twins.hub(keyed.filter(col("name").isNotNull), Seq("name"), "k")
     val vars = grp.select(col("name"), explode(deletionKeys(col("name"))).as("v"))
     // Candidate pairs: equi-join on the block key. name_a < name_b
     // both canonicalizes the pair and removes self-joins; distinct
@@ -111,25 +105,11 @@ object FuzzyJoin {
       .select(col("name_a"), col("name_b"),
         levenshtein(col("name_a"), col("name_b")).cast("long").as("dist"))
       .filter(col("dist") <= MaxDist)
-    // Expansion: every (x ∈ A, y ∈ B) inherits the rep pair's exact
-    // distance; least/greatest restores k_a < k_b (group member ids
-    // interleave). Chunked one explode per step.
-    val cross = crossRep
-      .join(grp.select(col("name").as("name_a"), col("members").as("ma")), "name_a")
-      .join(grp.select(col("name").as("name_b"), col("members").as("mb")), "name_b")
-      .select(col("dist"), col("mb"), explode(col("ma")).as("x"))
-      .select(col("dist"), col("x"), explode(col("mb")).as("y"))
-      .select(least(col("x"), col("y")).as("suppkey_a"),
-        greatest(col("x"), col("y")).as("suppkey_b"), col("dist"))
-    // Within-group pairs: identical names, distance 0 by identity.
-    // Members are sorted, so position i < j gives suppkey_a < suppkey_b.
-    val within = grp.filter(size(col("members")) >= 2)
-      .select(col("members"), posexplode(col("members")).as(Seq("i", "x")))
-      .select(col("x").as("suppkey_a"),
-        explode(slice(col("members"), col("i") + lit(2),
-          size(col("members")))).as("suppkey_b"),
-        lit(0L).as("dist"))
-    cross.unionByName(within)
+    // Cross-group member pairs inherit the rep pair's exact distance;
+    // within-group pairs are identical names, distance 0 by identity.
+    Twins.expandPairs(grp, "name",
+      crossRep.select(col("name_a").as("suppkey_a"), col("name_b").as("suppkey_b"), col("dist")),
+      grp.select(col("members"), lit(0L).as("dist")), "suppkey_a", "suppkey_b")
   }
 
   /** Streaming record linkage — [[fuzzyPairs]]' blocking applied

@@ -101,8 +101,8 @@ object Kmeans {
     * is a pure function of the quantized vector, and because every
     * update statistic is an exact INTEGER sum, a duplicated vector's
     * contribution is exactly `weight × q_i` — integer multiplication,
-    * associative, bit-equal to summing the copies. So behind a
-    * memoized embeddings-duplication probe, each Lloyd's round
+    * associative, bit-equal to summing the copies. So behind the
+    * embeddings twin gate (below), each Lloyd's round
     * aggregates one row per DISTINCT vector (weight-carrying, hub
     * persisted once for ALL rounds) instead of re-scanning the corpus
     * — ~95× less distance arithmetic per round at the 100× gate. The
@@ -114,19 +114,12 @@ object Kmeans {
     * corpora keep the scan-per-round form: the scaladoc above is
     * explicit that caching a 100 TB corpus is not a plan, and the
     * hub IS the corpus when nothing is duplicated.
+    *
+    * The gate is the embeddings twin gate ([[Twins.gate]] on the
+    * vector); perfbench reads its verdicts through this name.
     */
-  private val embGates = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-
   private[graft] def embTwinGate(s: SparkSession, dir: String): Boolean =
-    embGates.computeIfAbsent(dir, _ => {
-      val st = graft.Tables.spread(load(s, dir, "embeddings"))
-        .agg(count(lit(1)).as("n"),
-          approx_count_distinct(xxhash64(col("embedding"))).as("nd"))
-        .head
-      // n > 0: empty corpus = no twins (Dedup.twinGate's rule — 0 >= 0
-      // must not route degenerate inputs onto the collapse plans).
-      st.getLong(0) > 0L && st.getLong(0) * 10L >= st.getLong(1) * 12L
-    })
+    Twins.gate(s, dir, "embeddings", "vec_id", Seq("embedding"))
 
   /** Lloyd's: `iters` × (assign → integer-mean update), then a final
     * assignment against the trained centroids. `e` must be

@@ -249,28 +249,17 @@ object Similarity {
   // row_number truncation inside a bucket — so they weight exactly
   // (sum(mult) over hub rows ≡ count(1) over member rows, Long for
   // Long) and the family collapses like d4: band math and cosine run
-  // once per DISTINCT embedding value, member results expand back
-  // through group membership. (An earlier NOTES entry mislabeled these
-  // caps as member-level truncations; reading the code shows the cap
-  // drops whole buckets, which is the weightable case.) Twins share
-  // every band bucket — banding is a pure function of the vector — so
-  // co-occurrence decisions are group-level: if groups A and B share a
-  // surviving bucket, EVERY cross member pair co-occurs there, and the
-  // score round(cosine, 6) is bit-identical for all of them. Gated per
-  // corpus on [[Kmeans.embTwinGate]] (the memoized embeddings
-  // duplication probe the Lloyd's collapse already uses); unique
-  // corpora keep the original single-pass member-level plans.
-
-  /** One row per distinct vector value: `(vecCol, idCol = min member
-    * id, members sorted asc, mult)`. Persisted — every consumer reads
-    * it at least twice (banding + membership expansion).
-    */
-  private[ops] def vecHub(e: DataFrame, idCol: String, vecCol: String): DataFrame =
-    OpCaches.persisted(e
-      .groupBy(col(vecCol))
-      .agg(min(col(idCol)).as(idCol),
-        sort_array(collect_list(col(idCol))).as("members"),
-        count(lit(1)).as("mult")))
+  // once per DISTINCT embedding value (a [[Twins.hub]] on the vector),
+  // member results expand back through group membership. (An earlier
+  // NOTES entry mislabeled these caps as member-level truncations;
+  // reading the code shows the cap drops whole buckets, which is the
+  // weightable case.) Twins share every band bucket — banding is a
+  // pure function of the vector — so co-occurrence decisions are
+  // group-level: if groups A and B share a surviving bucket, EVERY
+  // cross member pair co-occurs there, and the score round(cosine, 6)
+  // is bit-identical for all of them. Gated on
+  // [[Kmeans.embTwinGate]], the embeddings gate the Lloyd's collapse
+  // also reads.
 
   /** [[cappedBands]] over hub rows: identical band explode and window
     * shape, with the bucket population as the mult-weighted sum.
@@ -359,18 +348,16 @@ object Similarity {
     */
   private[graft] def s2bAnnMultibandImpl(e: DataFrame, collapse: Boolean): DataFrame = {
     if (collapse) {
-      val hub = vecHub(e, "vec_id", "v")
+      val hub = Twins.hub(e, Seq("v"), "vec_id")
       val top = topCandidates(
         groupPairs(cappedBandsGrouped(hub, "vec_id", "v"), "vec_id", "v"),
         hub, "vec_id", keep = 2)
-      // when(isNotNull, ..) widens nullability back to the direct
-      // path's (d4's expansion precedent: analysis-time schema parity).
       return hub.select(col("vec_id").as("gq"), col("members")).join(top, Seq("gq"))
         .select(explode(col("members")).as("qx"), col("cand"))
         .select(col("qx"),
           filter(col("cand"), x => x.getField("nid") =!= col("qx")).as("c2"))
         .filter(size(col("c2")) >= 1)
-        .select(when(col("qx").isNotNull, col("qx")).as("query_id"),
+        .select(Twins.widen(col("qx"), e.schema("vec_id").nullable).as("query_id"),
           element_at(col("c2"), 1).getField("nid").as("neighbor_id"),
           element_at(col("c2"), 1).getField("cs").as("cos_sim"))
     }
@@ -418,20 +405,18 @@ object Similarity {
     */
   private[graft] def s6AnnRerankImpl(e: DataFrame, collapse: Boolean): DataFrame = {
     if (collapse) {
-      val hub = vecHub(e, "vec_id", "v")
+      val hub = Twins.hub(e, Seq("v"), "vec_id")
       val top = topCandidates(
         groupPairs(cappedBandsGrouped(hub, "vec_id", "v"), "vec_id", "v"),
         hub, "vec_id", keep = RerankK + 1)
-      // when(isNotNull, ..) widens nullability back to the direct
-      // path's (d4's expansion precedent: analysis-time schema parity).
       return hub.select(col("vec_id").as("gq"), col("members")).join(top, Seq("gq"))
         .select(explode(col("members")).as("qx"), col("cand"))
         .select(col("qx"),
           slice(filter(col("cand"), x => x.getField("nid") =!= col("qx")),
             1, RerankK).as("ck"))
         .select(col("qx"), posexplode(col("ck")).as(Seq("p", "c")))
-        .select(when(col("qx").isNotNull, col("qx")).as("query_id"),
-          when(col("c.nid").isNotNull, col("c.nid")).as("neighbor_id"),
+        .select(Twins.widen(col("qx"), e.schema("vec_id").nullable).as("query_id"),
+          Twins.widen(col("c.nid"), e.schema("vec_id").nullable).as("neighbor_id"),
           (col("p") + 1).cast("long").as("rank"), col("c.cs").as("cos_sim"))
     }
     val c = cappedBands(e, "vec_id", "v")

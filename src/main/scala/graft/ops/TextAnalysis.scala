@@ -513,23 +513,20 @@ object TextAnalysis {
   /** Frame-based core over any `(doc_id, text)` corpus. */
   def lmScore(docs: DataFrame): DataFrame = lmScore(docs, collapse = false)
 
-  /** EXACT TWIN COLLAPSE for t15 (round 16, the window-hash family's
-    * rule applied to the LM pass): a document's per-position p sequence
-    * is a pure function of its TEXT, and both model counts are exact
-    * INTEGER occurrence sums over the corpus — so behind the shared
-    * text [[Dedup.twinGate]], the bigram explode + stacked windows +
-    * position fold run once per DISTINCT text over [[Dedup.textHub]],
-    * with the window counts mult-weighted (sum(mult) over the same
-    * partitions ≡ count(1) over the per-copy rows, Long-for-Long) and
-    * scores fanned back through group membership. Bit-exact at any
-    * duplication depth: integer sums are associative, the quotient is
-    * the same two longs cast to double, and each text's position order
-    * is its own. Twin-free corpora keep the original single-pass plan
-    * below (zero overhead beyond the memoized probe).
+  /** EXACT TWIN COLLAPSE for t15 ([[Twins]], gated on text): a
+    * document's per-position p sequence is a pure function of its
+    * TEXT, and both model counts are exact INTEGER occurrence sums over
+    * the corpus — so the bigram explode + stacked windows + position
+    * fold run once per DISTINCT text, with the window counts
+    * mult-weighted (sum(mult) over the same partitions ≡ count(1) over
+    * the per-copy rows, Long-for-Long) and scores fanned back through
+    * group membership. Bit-exact at any duplication depth: integer
+    * sums are associative, the quotient is the same two longs cast to
+    * double, and each text's position order is its own.
     */
   private[graft] def lmScore(docs: DataFrame, collapse: Boolean): DataFrame = {
     if (collapse) {
-      val hub = Dedup.textHub(docs.select(col("doc_id"), col("text")))
+      val hub = Twins.hub(docs, Seq("text"), "doc_id")
       val bg = hub
         .select(col("doc_id"), col("mult"), toks(col("text")).as("tk"))
         .select(col("doc_id"), col("mult"),
@@ -553,7 +550,7 @@ object TextAnalysis {
           (aggregate(col("ps"), lit(0.0), (acc, x) => acc + x.getField("p")) /
             col("n_bigrams").cast("double")).as("lm_score"))
       return docs.select(col("doc_id"))
-        .join(Dedup.expandByMembers(scored, hub), Seq("doc_id"), "left")
+        .join(Twins.expand(scored, hub, "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
           col("lm_score"))
@@ -627,27 +624,22 @@ object TextAnalysis {
   def importanceWeights(docs: DataFrame): DataFrame =
     importanceWeights(docs, collapse = false)
 
-  /** EXACT TWIN COLLAPSE for t16 (t15's rule with the target flag in
-    * the key): a document's bucket sequence is a pure function of its
-    * TEXT, and both bucket counts are exact integer sums where each
-    * row contributes (tgt, 1) — so the hub groups by (tgt, text)
-    * (collapsing same-text docs across all non-target langs too),
-    * weights the window sums by mult (`sum(mult*tgt)` ≡ `sum(tgt)`
-    * per copy, `sum(mult)` ≡ `count(1)` — Long-for-Long), and fans
-    * per-representative scores back through membership. The gate key
-    * is (lang, text): distinct(tgt, text) ≤ distinct(lang, text), so
-    * the probe can only under-fire, never mis-fire.
+  /** EXACT TWIN COLLAPSE for t16 ([[Twins]]; t15's rule with the
+    * target flag in the key): a document's bucket sequence is a pure
+    * function of its TEXT, and both bucket counts are exact integer
+    * sums where each row contributes (tgt, 1) — so the hub groups by
+    * (tgt, text) (collapsing same-text docs across all non-target
+    * langs too), weights the window sums by mult (`sum(mult*tgt)` ≡
+    * `sum(tgt)` per copy, `sum(mult)` ≡ `count(1)` — Long-for-Long),
+    * and fans per-representative scores back through membership. The
+    * gate key is (lang, text): distinct(tgt, text) ≤ distinct(lang,
+    * text), so the probe can only under-fire, never mis-fire.
     */
   private[graft] def importanceWeights(docs: DataFrame, collapse: Boolean): DataFrame = {
     if (collapse) {
-      val hub = OpCaches.persisted(docs
-        .select(col("doc_id"),
-          (col("lang") <=> lit(ImpTargetLang)).cast("int").as("tgt"),
-          col("text"))
-        .groupBy(col("tgt"), col("text"))
-        .agg(min(col("doc_id")).as("doc_id"),
-          sort_array(collect_list(col("doc_id"))).as("members"),
-          count(lit(1)).as("mult")))
+      val hub = Twins.hub(docs.select(col("doc_id"),
+          (col("lang") <=> lit(ImpTargetLang)).cast("int").as("tgt"), col("text")),
+        Seq("tgt", "text"), "doc_id")
       val tk = hub
         .select(col("doc_id"), col("tgt"), col("mult"), toks(col("text")).as("tk"))
         .select(col("doc_id"), col("tgt"), col("mult"), posexplode(col("tk")))
@@ -666,7 +658,7 @@ object TextAnalysis {
           (aggregate(col("rs"), lit(0.0), (a, x) => a + x.getField("r")) /
             col("n_tokens").cast("double")).as("imp_weight"))
       return docs.select(col("doc_id"))
-        .join(Dedup.expandByMembers(scored, hub), Seq("doc_id"), "left")
+        .join(Twins.expand(scored, hub, "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
           col("imp_weight"))
@@ -796,7 +788,7 @@ object TextAnalysis {
       maxPostings: Int): DataFrame =
     contamination(docs, evalSource, maxPostings, collapse = false)
 
-  /** EXACT TWIN COLLAPSE for t10 (round 16, t13's tagged-hub rule): a
+  /** EXACT TWIN COLLAPSE for t10 ([[Twins]]; t13's tagged-hub rule): a
     * document's distinct shingle set is a pure function of its TEXT,
     * the only source-dependence is the eval FLAG, and both per-shingle
     * corpus terms are integer occurrence sums — the posting cap is a
@@ -813,13 +805,9 @@ object TextAnalysis {
   private[graft] def contamination(docs: DataFrame, evalSource: String,
       maxPostings: Int, collapse: Boolean): DataFrame = {
     if (collapse) {
-      val hub = OpCaches.persisted(docs
-        .select(col("doc_id"), (col("source") <=> evalSource).as("ev"),
-          col("text"))
-        .groupBy(col("ev"), col("text"))
-        .agg(min(col("doc_id")).as("doc_id"),
-          sort_array(collect_list(col("doc_id"))).as("members"),
-          count(lit(1)).as("mult")))
+      val hub = Twins.hub(docs.select(col("doc_id"),
+          (col("source") <=> evalSource).as("ev"), col("text")),
+        Seq("ev", "text"), "doc_id")
       val rep = hub
         .select(col("doc_id"), col("ev"), col("mult"), toks(col("text")).as("t"))
         .select(col("doc_id"), col("ev"), col("mult"),
@@ -836,8 +824,7 @@ object TextAnalysis {
         .select(explode(col("docs")).as("doc_id"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_hit_shingles"))
-      return Dedup.expandByMembers(rep,
-        hub.filter(!col("ev")).select(col("doc_id"), col("members")))
+      return Twins.expand(rep, hub.filter(!col("ev")), "doc_id")
     }
     contaminationDirect(docs, evalSource, maxPostings)
   }

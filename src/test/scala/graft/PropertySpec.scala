@@ -324,6 +324,8 @@ class PropertySpec extends AnyFunSuite {
       def run(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
       // Public entry: the stat probe must read depth 2.0 and collapse.
+      assert(graft.ops.Dedup.d4NgramJaccard(spark, dir.getPath).schema ==
+        graft.ops.Dedup.d4NgramJaccardImpl(spark, dir.getPath, collapse = false).schema)
       val got = run(graft.ops.Dedup.d4NgramJaccard(spark, dir.getPath))
       assert(got.keySet == expect.keySet)
       expect.foreach { case (k, v) => assert(math.abs(got(k) - v) <= 5e-7, k) }
@@ -427,6 +429,7 @@ class PropertySpec extends AnyFunSuite {
         val (g, w) = (set(got), set(want))
         assert(g.nonEmpty, s"$name produced no rows — vacuous")
         assert(g == w, s"$name collapse diverged from direct")
+        assert(got.schema == want.schema, s"$name schema diverged from direct")
       }
       // The collapse actually engaged (gate depth 11/6 ≥ 1.2).
       assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")))
@@ -445,6 +448,9 @@ class PropertySpec extends AnyFunSuite {
     // fixtures are twin-free, so these legs otherwise only execute at
     // the 100× gate. (t6 was measured on this corpus too and its
     // collapse REVERTED — see the negative-result note on t6TfIdf.)
+    // A second variant adds null doc_id rows: the direct groupBy merges
+    // them into one signature row, which the hub's members cannot
+    // reproduce, so the gate must read false there.
     val t1 = "alpha beta gamma delta alpha beta"
     val t2 = "alpha beta gamma delta epsilon zeta"
     val t3 = "zeta eta theta iota kappa lambda zeta"
@@ -454,26 +460,68 @@ class PropertySpec extends AnyFunSuite {
       (4L, t2), (5L, t2), (6L, t2),
       (7L, t3), (8L, t3), (9L, t3),
       (10L, t4), (11L, ""), (12L, null.asInstanceOf[String]))
+    val withNullIds = rows.map { case (id, t) => (Option(id), t) } ++
+      Seq((None, t1), (None, t4))
     val dir = java.nio.file.Files.createTempDirectory("sigTwins").toFile
+    val nullDir = java.nio.file.Files.createTempDirectory("sigTwinsNullId").toFile
     try {
       rows.toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("src1"))
         .write.mode("overwrite").parquet(s"${dir.getPath}/documents.parquet")
-      // The public entries must take the collapse branch on this corpus.
+      withNullIds.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("src1"))
+        .write.mode("overwrite").parquet(s"${nullDir.getPath}/documents.parquet")
+      // The public entries must take the collapse branch on this corpus,
+      // and the direct branch once null ids are present.
       assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")))
-      assert(!graft.ops.Dedup.hasNullDocId(spark, dir.getPath))
+      assert(!graft.ops.Dedup.twinGate(spark, nullDir.getPath, Seq("text")))
       def set(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(_.toSeq.toList).toSet
-      val pairs: Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = Seq(
-        ("d3", graft.ops.Dedup.d3Simhash(spark, dir.getPath),
-          graft.ops.Dedup.d3SimhashImpl(spark, dir.getPath, collapse = false)),
-        ("d7", graft.ops.Dedup.d7Simhash64(spark, dir.getPath),
-          graft.ops.Dedup.d7Simhash64Impl(spark, dir.getPath, collapse = false)))
-      for ((name, got, want) <- pairs) {
-        val (g, w) = (set(got), set(want))
-        assert(g.nonEmpty, s"$name produced no rows — vacuous")
-        assert(g == w, s"$name collapse diverged from direct")
+      for (d <- Seq(dir.getPath, nullDir.getPath)) {
+        val pairs: Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = Seq(
+          ("d3", graft.ops.Dedup.d3Simhash(spark, d),
+            graft.ops.Dedup.d3SimhashImpl(spark, d, collapse = false)),
+          ("d7", graft.ops.Dedup.d7Simhash64(spark, d),
+            graft.ops.Dedup.d7Simhash64Impl(spark, d, collapse = false)))
+        for ((name, got, want) <- pairs) {
+          val (g, w) = (set(got), set(want))
+          assert(g.nonEmpty, s"$name produced no rows — vacuous")
+          assert(g == w, s"$name collapse diverged from direct")
+          assert(got.schema == want.schema, s"$name schema diverged from direct")
+        }
       }
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
+      }
+      rm(dir); rm(nullDir)
+    }
+  }
+
+  test("twin gates follow an in-place rewrite of the corpus within one session") {
+    // The gate memo is keyed on the table's file listing, not its
+    // directory: overwriting documents/embeddings with duplicated
+    // contents must be probed afresh, not answered from the verdict
+    // memoized for the twin-free contents.
+    val dir = java.nio.file.Files.createTempDirectory("gateRewrite").toFile
+    def write(copies: Int): Unit = {
+      val ids = for (i <- 0 until 20; c <- 0 until copies) yield (i * 10 + c).toLong
+      ids.map(id => (id, s"document text number ${id / 10}")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"${dir.getPath}/documents.parquet")
+      ids.map(id => (id, Seq((id / 10).toFloat, 1.0f))).toDF("vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"${dir.getPath}/embeddings.parquet")
+    }
+    try {
+      write(copies = 1)
+      assert(!graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")),
+        "text gate must read false on the twin-free corpus")
+      assert(!graft.ops.Kmeans.embTwinGate(spark, dir.getPath),
+        "embeddings gate must read false on the twin-free corpus")
+      write(copies = 3)
+      assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")),
+        "text gate kept its stale verdict after the corpus was rewritten")
+      assert(graft.ops.Kmeans.embTwinGate(spark, dir.getPath),
+        "embeddings gate kept its stale verdict after the corpus was rewritten")
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
@@ -579,6 +627,9 @@ class PropertySpec extends AnyFunSuite {
         .parquet(s"${dir.getPath}/documents.parquet")
       def run(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      assert(graft.ops.Dedup.d2MinhashLsh(spark, dir.getPath).schema ==
+        graft.ops.Dedup.minhashPairs(
+          spark.read.parquet(s"${dir.getPath}/documents.parquet")).schema)
       val got = run(graft.ops.Dedup.d2MinhashLsh(spark, dir.getPath))
       val direct = run(graft.ops.Dedup.minhashPairs(
         spark.read.parquet(s"${dir.getPath}/documents.parquet")))
@@ -925,6 +976,7 @@ class PropertySpec extends AnyFunSuite {
       val (g, v) = (set(got), set(want))
       assert(g.nonEmpty, s"$name produced no rows — vacuous")
       assert(g == v, s"$name collapse diverged from direct")
+      assert(got.schema == want.schema, s"$name schema diverged from direct")
     }
     // Non-vacuous shape checks on the direct output the collapse had to
     // reproduce: within-group and cross-group d8b pairs both present;
@@ -973,9 +1025,13 @@ class PropertySpec extends AnyFunSuite {
       val lmGot = set(TextAnalysis.t15LmScore(spark, dir.getPath))
       val lmWant = set(TextAnalysis.lmScore(docs))
       assert(lmGot.nonEmpty && lmGot == lmWant, "t15 collapse diverged")
+      assert(TextAnalysis.t15LmScore(spark, dir.getPath).schema ==
+        TextAnalysis.lmScore(docs).schema, "t15 schema diverged")
       val impGot = set(TextAnalysis.t16Importance(spark, dir.getPath))
       val impWant = set(TextAnalysis.importanceWeights(docs))
       assert(impGot.nonEmpty && impGot == impWant, "t16 collapse diverged")
+      assert(TextAnalysis.t16Importance(spark, dir.getPath).schema ==
+        TextAnalysis.importanceWeights(docs).schema, "t16 schema diverged")
       // The collapse paths were exercised, not vacuously equal: the
       // weighted hub really has multi-member groups on this corpus.
       assert(lmGot.size == rows.size && impGot.size == rows.size)
